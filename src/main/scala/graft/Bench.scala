@@ -96,35 +96,40 @@ object Bench {
         // hit both runs, while genuine external load inflates both
         probes += math.min(calibrateOnce(spark), calibrateOnce(spark))
       }
-      val t0 = System.nanoTime()
-      val buildSec = indexBuild.get(name).map { hook =>
-        try hook(spark, sfDir)
+      // a query that throws is recorded as failed and never timed: a
+      // fast failure must not read as a fast query
+      def attempt(what: String)(body: => Unit): Boolean =
+        try { body; true }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name build failed: ${e.getMessage}")
+          System.err.println(s"[bench] $name $what failed: ${e.getMessage}")
+          false
         }
-        (System.nanoTime() - t0) / 1e9
-      }
+      val t0 = System.nanoTime()
+      val buildOk = indexBuild.get(name).forall(hook =>
+        attempt("build")(hook(spark, sfDir)))
       val t1 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok = attempt("query")(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()) &&
+        buildOk
       val dt = (System.nanoTime() - t0) / 1e9
-      buildSec.foreach { b =>
-        breakdown += (s"$name.build" -> b)
+      if (ok && indexBuild.contains(name)) {
+        breakdown += (s"$name.build" -> (t1 - t0) / 1e9)
         breakdown += (s"$name.probe" -> ((System.nanoTime() - t1) / 1e9))
       }
       // release per-query persisted subtrees so earlier queries don't
       // pressure later ones
       spark.catalog.clearCache()
-      name -> dt
+      (name, dt, ok)
     }
     // one final probe so the tail of the run is covered too
     if (results.size >= ProbeEvery && sinceProbe > ProbeEvery / 3)
       probes += math.min(calibrateOnce(spark), calibrateOnce(spark))
-    val qs = (results ++ breakdown).map { case (k, v) => "\"" + k + "\":" + v }
+    val timed = results.collect { case (n, dt, true) => n -> dt }
+    val failed = results.collect { case (n, _, false) => n }
+    val qs = (timed ++ breakdown).map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+    val total = timed.map(_._2).sum
     val probesJson = probes.map(p => f"$p%.4f").mkString("[", ",", "]")
     // Artifact-of-record discipline (round-7 lesson: a round-end run
     // taken under snapshot load overwrote the clean 222 s steady-state
@@ -144,10 +149,14 @@ object Bench {
     //      record of capability (round-11 lesson: the driver's
     //      BENCH_r11.json captured a load-contaminated run the guards
     //      had correctly refused, and nothing in the JSON said so).
-    // SPARK_GRAFT_BENCH_FORCE=1 overrides the guard (e.g. after an
-    // intentional change that made queries slower-but-better).
+    //   4. A run in which any query failed is refused: its failed
+    //      queries are listed under "failed" and left out of the
+    //      total, the mean and the per-query map.
+    // SPARK_GRAFT_BENCH_FORCE=1 overrides the load and slowdown guards
+    // (e.g. after an intentional change that made queries
+    // slower-but-better), never a failed query.
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_solo.json")
-    val newMean = if (results.nonEmpty) total / results.size else 0.0
+    val newMean = if (timed.nonEmpty) total / timed.size else 0.0
     // mid-run contamination: any interleaved probe reading >1.2× the
     // run's own start calibration means a load stretch hit the middle
     // of the suite — the start-only sentinel cannot see this (round-10:
@@ -198,7 +207,7 @@ object Bench {
     // queries BOTH runs measured (falls back to the whole-mean ratio
     // when the prior record predates per-query maps)
     val commonRatio: Double = {
-      val common = results.collect {
+      val common = timed.collect {
         case (n, s) if priorQueries.contains(n) => (s, priorQueries(n))
       }
       if (common.isEmpty) prior.map(p => newMean / p._1).getOrElse(1.0)
@@ -208,7 +217,10 @@ object Bench {
     // the guards, evaluated BEFORE the line is rendered so a refusal
     // rides inside every artifact this run writes
     val refusalReason: Option[String] =
-      if (force) None
+      if (failed.nonEmpty) Some(
+        s"${failed.size} queries failed (${failed.mkString(", ")}) - a " +
+          "run with failures is never a record")
+      else if (force) None
       else if (contaminatedProbe.isDefined) Some(
         f"mid-run probe ${contaminatedProbe.get}%.3f s > 1.20x this " +
           f"run's own $calibration%.3f s start calibration - transient " +
@@ -235,7 +247,7 @@ object Bench {
       .map(r => s""","refused":true,"refusal_reason":"${r.replace("\"", "'")}"""")
       .getOrElse("")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"calibration":$calibration,"probes":$probesJson$refusedJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${timed.size},"calibration":$calibration,"probes":$probesJson$refusedJson,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     try {
       val epoch = System.currentTimeMillis() / 1000
@@ -258,8 +270,9 @@ object Bench {
         case Some(r) =>
           System.err.println(
             s"[bench] REFUSING to overwrite $benchOut: $r. This run is " +
-              s"preserved at $stamped (stamped refused:true); set " +
-              "SPARK_GRAFT_BENCH_FORCE=1 to override.")
+              s"preserved at $stamped (stamped refused:true)" +
+              (if (failed.isEmpty)
+                "; set SPARK_GRAFT_BENCH_FORCE=1 to override." else "."))
         case None =>
           java.nio.file.Files.writeString(target, line + "\n")
       }
@@ -270,11 +283,11 @@ object Bench {
     // of this process' output can truncate it mid-map — repeat the
     // headline numbers LAST, compactly (total + top-5 slowest), so the
     // tail always carries a complete, parseable JSON line
-    val top5 = results.sortBy(-_._2).take(5)
+    val top5 = timed.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // distinct metric name: a consumer filtering metric=="total" must
     // not see the same value twice
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size}$refusedJson,"top5_slowest":$top5,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${timed.size}$refusedJson,"top5_slowest":$top5,"failed":$failedJson,"sf":"$sfDir"}""")
     graft.queries.Dedup.releaseShared(spark, sfDir)
     graft.queries.Graphs.releaseShared(spark, sfDir)
     spark.stop()

@@ -27,11 +27,9 @@ object GraftSession {
     */
   def local(cpus: Int = 32, appName: String = "graft",
       taskRetries: Int = 1): SparkSession =
-    finish(SparkSession
-      .builder()
-      .master(if (taskRetries > 1) s"local[$cpus,$taskRetries]"
-        else s"local[$cpus]")
-      .appName(appName)
+    finish(base(
+      if (taskRetries > 1) s"local[$cpus,$taskRetries]" else s"local[$cpus]",
+      appName)
       // shuffle/block-manager scratch on the fastest local device
       // (guide §2.1: shuffle-file latency is the tighter limit on
       // slow disks). See [[Scratch]] for the policy + measurements;
@@ -85,10 +83,8 @@ object GraftSession {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-    val builder = SparkSession
-      .builder()
-      .master(s"local-cluster[$workers,$coresPerWorker,$workerMemMB]")
-      .appName(appName)
+    val builder = base(
+        s"local-cluster[$workers,$coresPerWorker,$workerMemMB]", appName)
       .config("spark.executor.memory", s"${workerMemMB}m")
       .config("spark.executor.extraJavaOptions", addOpens)
       .config("spark.sql.shuffle.partitions",
@@ -96,6 +92,23 @@ object GraftSession {
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     finish(builder)
   }
+
+  /** The builder every session starts from. It registers the fork-free
+    * local file system ([[graft.io.ForkFreeRawLocalFileSystem]]) for
+    * both Hadoop entry points: `FileSystem` (parquet writers, commit
+    * protocol, listings) and `FileContext` (streaming offset and commit
+    * logs, state-store files). Set here, before any caller conf, so a
+    * caller's own `spark.hadoop.fs.file.impl` still wins.
+    */
+  private def base(master: String, appName: String): SparkSession.Builder =
+    SparkSession
+      .builder()
+      .master(master)
+      .appName(appName)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.ForkFreeLocalFs].getName)
 
   private def finish(
       builder: SparkSession.Builder): SparkSession = {

@@ -47,6 +47,21 @@ object StreamingOps extends QueryPack {
     graft.Tables.normalizeEventTs(tableStream(s, dir, "events"))
   }
 
+  /** The /tmp dir of staged fixture `name` for input `dir`:
+    * `/tmp/graft-<name>[-<graft.stage.ns>]-<dir, sanitized>`. The
+    * namespace keeps a run's fixtures away from the shared ones —
+    * ChaosRetrySpec sets it so failure-injection runs can never poison
+    * the fixtures other suites (or a concurrently running Verify/Bench
+    * JVM) read. The dir is keyed by the sanitized path itself, last: a
+    * hash could collide across sf dirs and silently stream the wrong
+    * dataset, and clean-up matches on that suffix.
+    */
+  private def stagePath(name: String, dir: String): String = {
+    val ns = sys.props.get("graft.stage.ns").filter(_.nonEmpty)
+      .map(n => s"-$n").getOrElse("")
+    s"/tmp/graft-$name$ns-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+  }
+
   /** Streaming view of any single-file parquet table under `dir` (the
     * file streaming source wants a *directory* to watch, so the file
     * is linked into a per-(dir, table) staging dir — in production
@@ -56,10 +71,7 @@ object StreamingOps extends QueryPack {
       table: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val src = Paths.get(s"$dir/$table.parquet")
-    // key the staging dir by the sanitized path itself — a hash could
-    // collide across sf dirs and silently stream the wrong dataset
-    val streamDir = Paths.get(
-      s"/tmp/graft-stream-$table-${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
+    val streamDir = Paths.get(stagePath(s"stream-$table", dir))
     Files.createDirectories(streamDir)
     val link = streamDir.resolve(s"$table.parquet")
     // a stale link (target regenerated/deleted) must be replaced, and
@@ -96,14 +108,7 @@ object StreamingOps extends QueryPack {
       keys: Seq[org.apache.spark.sql.Column]): String = {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types.{Metadata, StructType}
-    // `graft.stage.ns` namespaces a run's staged fixtures away from
-    // the shared /tmp dirs — ChaosRetrySpec sets it so failure-
-    // injection runs can never poison the fixtures other suites (or a
-    // concurrently running Verify/Bench JVM) read.
-    val ns = sys.props.get("graft.stage.ns").filter(_.nonEmpty)
-      .map(n => s"-$n").getOrElse("")
-    val stageDir =
-      s"/tmp/graft-$tag$ns-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val stageDir = stagePath(tag, dir)
     val done = Paths.get(stageDir, "_STAGED")
     // parquet read-back normalizes nullability/metadata; compare
     // structurally (name + type) on both sides
@@ -173,10 +178,7 @@ object StreamingOps extends QueryPack {
     import org.apache.spark.sql.expressions.Window
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s.read.parquet(s"$dir/events.parquet")
-    val rrNs = sys.props.get("graft.stage.ns").filter(_.nonEmpty)
-      .map(n => s"-$n").getOrElse("")
-    val stageDir =
-      s"/tmp/graft-stream-rr$parts$rrNs-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val stageDir = stagePath(s"stream-rr$parts", dir)
     val done = Paths.get(stageDir, "_STAGED")
     // Same self-healing sentinel as stageDeterministic: the count in
     // the sentinel forces a full data-page read, so a dir corrupted by

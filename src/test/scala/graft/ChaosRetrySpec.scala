@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * genuine TASK failure that Spark's `local[N, maxFailures]` retry
   * machinery must absorb.
   */
-class ChaosLocalFileSystem extends LocalFileSystem {
+class ChaosLocalFileSystem extends graft.io.ForkFreeLocalFileSystem {
   /** Armed either by the JVM-static flag (single-JVM local mode) or
     * by the Hadoop conf key — the conf ships to executor JVMs inside
     * the serialized job configuration, which is what lets the same
