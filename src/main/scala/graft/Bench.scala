@@ -38,6 +38,42 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** The recorded artifact a run is compared against: its `total`
+    * over `n_queries` timed queries, the scale factor and load
+    * calibration it was taken at, and its per-query map (which also
+    * holds the informational `.build`/`.probe` breakdown entries). */
+  final case class Prior(total: Double, nQueries: Int, sf: Option[String],
+      calibration: Option[Double], queries: Map[String, Double]) {
+    def mean: Double = total / nQueries
+  }
+
+  /** Parse an artifact line; None when it is not a usable record
+    * (unparseable, or missing `value` or a positive `n_queries`). */
+  def parsePrior(json: String): Option[Prior] = {
+    import org.json4s._
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(d) => Some(d)
+      case JDecimal(d) => Some(d.toDouble)
+      case JLong(l) => Some(l.toDouble)
+      case JInt(i) => Some(i.toDouble)
+      case _ => None
+    }
+    try {
+      val doc = org.json4s.jackson.JsonMethods.parse(json)
+      for {
+        total <- num(doc \ "value")
+        n <- num(doc \ "n_queries").map(_.toInt) if n > 0
+      } yield Prior(total, n,
+        doc \ "sf" match { case JString(sf) => Some(sf); case _ => None },
+        num(doc \ "calibration"),
+        doc \ "queries" match {
+          case JObject(fields) =>
+            fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+          case _ => Map.empty
+        })
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -162,47 +198,14 @@ object Bench {
     // of the suite — the start-only sentinel cannot see this (round-10:
     // eight queries read 2–4× in an otherwise-clean promoted run)
     val contaminatedProbe = probes.find(_ > calibration * 1.20)
+    // the recorded artifact this run is compared against (see
+    // [[Prior]]): its mean is only comparable at the SAME scale factor,
+    // over the INTERSECTION of query sets
     val target = java.nio.file.Paths.get(benchOut)
-      // (priorMean, priorSf, priorCalibration): a mean is only
-      // comparable at the SAME scale factor — an sf0.01 dev run's tiny
-      // per-query mean must never displace the sf0.1 artifact of
-      // record (this happened once: a 0.88 s/q sf0.01 smoke "beat" the
-      // 1.19 s/q sf0.1 record and overwrote it).
-      // the prior record's per-query map: the mean comparison must run
-      // over the INTERSECTION of query sets — a whole-suite mean rises
-      // every time a round ADDS queries (heavier lifecycle queries are
-      // legitimate growth, not load), which would wedge the record
-      // forever on a growing suite
-    val priorQueries: Map[String, Double] =
-      if (!java.nio.file.Files.exists(target)) Map.empty
-      else try {
-        val old = java.nio.file.Files.readString(target)
-        """"([a-z0-9]+_[a-z0-9_.]*)":([0-9.eE+\-]+)""".r
-          .findAllMatchIn(old)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          .removed("n_queries") // header field the query regex also hits
-      } catch { case _: Throwable => Map.empty }
-    val prior: Option[(Double, Option[String], Option[Double])] =
+    val prior: Option[Prior] =
       if (!java.nio.file.Files.exists(target)) None
-      else try {
-        val old = java.nio.file.Files.readString(target)
-        val totalRe = """"metric":"total","value":([0-9.eE+\-]+)""".r
-        val nRe = """"n_queries":([0-9]+)""".r
-        val sfRe = """"sf":"([^"]+)"""".r
-        val calRe = """"calibration":([0-9.eE+\-]+)""".r
-        val oldTotal = totalRe.findFirstMatchIn(old).map(_.group(1).toDouble)
-        val oldN = nRe.findFirstMatchIn(old).map(_.group(1).toInt)
-          // pre-n_queries artifacts: count per-query entries inside
-          // the queries map only (query ids carry a '_'), minus the
-          // informational .build/.probe breakdown lines
-          .orElse(Some("\"[a-z0-9]+_[a-z0-9_.]*\":[0-9]".r
-            .findAllIn(old).size - "\\.(build|probe)\":[0-9]".r
-            .findAllIn(old).size))
-          .filter(_ > 0)
-        val oldSf = sfRe.findFirstMatchIn(old).map(_.group(1))
-        val oldCal = calRe.findFirstMatchIn(old).map(_.group(1).toDouble)
-        for (t <- oldTotal; n <- oldN) yield (t / n, oldSf, oldCal)
-      } catch { case _: Throwable => None }
+      else parsePrior(java.nio.file.Files.readString(target))
+    val priorQueries = prior.map(_.queries).getOrElse(Map.empty)
     // composition-independent slowdown: total seconds over the
     // queries BOTH runs measured (falls back to the whole-mean ratio
     // when the prior record predates per-query maps)
@@ -210,7 +213,7 @@ object Bench {
       val common = timed.collect {
         case (n, s) if priorQueries.contains(n) => (s, priorQueries(n))
       }
-      if (common.isEmpty) prior.map(p => newMean / p._1).getOrElse(1.0)
+      if (common.isEmpty) prior.map(p => newMean / p.mean).getOrElse(1.0)
       else common.map(_._1).sum / common.map(_._2).sum
     }
     val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
@@ -226,11 +229,12 @@ object Bench {
           f"run's own $calibration%.3f s start calibration - transient " +
           "load hit the middle of the suite")
       else prior match {
-        case Some((_, Some(oldSf), _)) if oldSf != sfDir => Some(
+        case Some(Prior(_, _, Some(oldSf), _, _)) if oldSf != sfDir => Some(
           s"recorded artifact is at sf '$oldSf' but this run is at " +
             s"'$sfDir' - means at different scale factors are not " +
             "comparable")
-        case Some((_, _, Some(oldCal))) if calibration > oldCal * 1.20 =>
+        case Some(Prior(_, _, _, Some(oldCal), _))
+            if calibration > oldCal * 1.20 =>
           // the load sentinel fires BEFORE the mean comparison: a busy
           // machine inflates both, and only the calibration probe can
           // tell "machine busy" from "suite grew/slowed"

@@ -6,8 +6,9 @@ import java.nio.file.{FileSystemException, Files}
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
+  FSDataInputStream, FileStatus, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -105,7 +106,13 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
   * checkpoint and state-store files are written through. Like Hadoop's
   * `LocalFs`, it ignores `uri`: the local file system has one. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeLocalFs.Raw(conf))
+    extends ChecksumFs(new ForkFreeLocalFs.Raw(conf)) {
+  // Hadoop's FilterFs hands open(Path), which FileContext.open(path)
+  // calls, straight to the raw file system and so never reads the
+  // .crc sidecar; the buffered open verifies it
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForkFreeLocalFs {
   /** Hadoop's `RawLocalFs` (whose constructors are package-private) over

@@ -1539,11 +1539,11 @@ object ManifestTable {
   // ---- writers --------------------------------------------------------
 
   /** Write `df` as new immutable data files and return their entries:
-    * ONE read-back grouped by input_file_name yields every file's row
-    * count, (when `statsCol` is set) its min/max, per-`statsCols`
-    * multi-column min/max, and (when `partitionCols` is set) the
-    * file's partition tuple — the per-file statistics pass every
-    * table format's writer performs.
+    * the written files' footers ([[entriesFromDir]]) yield every
+    * file's row count, (when `statsCol` is set) its min/max,
+    * per-`statsCols` multi-column min/max, and (when `partitionCols`
+    * is set) the file's partition tuple — the per-file statistics
+    * pass every table format's writer performs.
     *
     * When no `statsCols` are requested, the writer collects [lo, hi]
     * for the first [[AutoStatsCols]] INTEGRAL leaf columns anyway
@@ -1551,16 +1551,17 @@ object ManifestTable {
     * — that default is what makes an AD-HOC range predicate prune
     * files from the manifest without any DDL ever having named the
     * column. Integral only: the stats grammar is (long, long), and a
-    * column the grammar can't represent exactly must not prune.
+    * column the grammar can't represent exactly must not prune
+    * (strings ride it through an order-preserving prefix encoding).
     *
     * Partitioned layout: the writer partitions by STRING COPIES
     * (`__p_<col>`) of the partition columns, so the hive-style
     * directories exist for operators that want them while the REAL
     * columns stay inside every data file — per-file reads (time
     * travel, change feed, compaction) never need basePath
-    * reconstruction, and the partition tuple recorded in the log is
-    * EXACT (every row of a file carries it, guaranteed by the write
-    * itself, not inferred from a directory name). */
+    * reconstruction. The partition tuple recorded in the log is read
+    * back from the `__p_` directory this write itself chose for the
+    * file, so every row of the file carries it. */
   private def writeFiles(spark: SparkSession, dir: String,
       df0: DataFrame, statsCol: Option[String],
       partitionCols: Seq[String] = Nil,
@@ -1569,8 +1570,8 @@ object ManifestTable {
       checks: Map[String, String] = Map.empty): Vector[ManifestEntry] = {
     import org.apache.spark.sql.functions._
     // column-mapped tables store PHYSICAL names in every file: rename
-    // the frame before writing, run the stats read-back in physical
-    // space, and translate the recorded keys back to logical at the
+    // the frame before writing, collect the stats in physical space,
+    // and translate the recorded keys back to logical at the
     // end (the manifest speaks logical; the files speak physical)
     def phys(c: String): String = colMap.getOrElse(c, c)
     val df = if (colMap.isEmpty) df0 else df0.withColumnsRenamed(colMap)
@@ -1578,11 +1579,10 @@ object ManifestTable {
     val sub = new Path(dir, s"data-$stamp").toString
     partitionCols.map(phys).foreach(c => require(df.columns.contains(c),
       s"partition column $c is not in the frame (${df.columns.mkString(",")})"))
-    // the __p_ copies are HEX-encoded: the hive directory name is
-    // layout-only (partition values are recorded from the DATA at
-    // read-back, never parsed from dir names), and hex keeps every
-    // value — unicode, quotes, slashes — a portable ASCII path segment
-    // on any filesystem charset
+    // the __p_ copies are HEX-encoded cast(col as string): hex keeps
+    // every value — unicode, quotes, slashes — a portable ASCII path
+    // segment on any filesystem charset, and decodes back to exactly
+    // the string the manifest records as the partition value
     val physParts = partitionCols.map(phys)
     if (physParts.isEmpty) df.write.mode("errorifexists").parquet(sub)
     else df.withColumns(physParts.map(c =>
@@ -1606,8 +1606,8 @@ object ManifestTable {
     val effectiveStats =
       if (statsCols.nonEmpty) statsCols.map(phys)
       else autoStatsFor(df.schema, statsCol.map(phys), physParts)
-    val raw = entriesFromDir(spark, sub, df.columns.toSeq,
-      statsCol.map(phys), physParts, effectiveStats)
+    val raw = entriesFromDir(spark, sub, statsCol.map(phys), physParts,
+      effectiveStats)
     if (colMap.isEmpty) raw
     else {
       val back = colMap.map(_.swap)
@@ -1712,348 +1712,169 @@ object ManifestTable {
     }
   }
 
-  /** The per-file statistics collection over an already-written
-    * directory — shared by [[writeFiles]] and the DSv2 replace-data
-    * commit (whose files the EXECUTORS wrote through Spark's native
-    * parquet write path).
+  /** The per-file statistics of an already-written directory — shared
+    * by [[writeFiles]] and the DSv2 replace-data commit (whose files
+    * the EXECUTORS wrote through Spark's native parquet write path).
     *
-    * Fast path ([[entriesFromFooters]]): read each file's PARQUET
-    * FOOTER driver-side — row counts and column min/max are already
-    * there, written by the write job itself, so no second Spark
-    * action (plan + job + full data re-read) is paid per write door.
-    * This is what a WriteJobStatsTracker buys Delta, obtained from
-    * the footer the tracker would have populated anyway. The footer
-    * path handles exactly the stats grammar's types (integral longs,
-    * UTF-8 strings, and int/long/string/date partition values); any
-    * column outside that contract — or a footer with dropped or
-    * ambiguous statistics — falls back to the original read-back
-    * ([[entriesFromReadback]]), which remains the semantic
-    * definition. Equivalence argument per field: parquet row-group
-    * counts sum to count(*); footer int32/int64 min/max ARE
-    * min/max(col) (cast to long is the identity on integrals);
-    * footer binary-string min/max compare unsigned-lexicographic —
-    * the same total order UTF8String uses — and Spark leaves
-    * parquet's statistics truncation OFF, so they are the exact
-    * strings the old path aggregated. */
+    * Everything comes from each file's PARQUET FOOTER, read
+    * driver-side: the write job already put row counts and column
+    * min/max there, so no Spark action runs here. This is what a
+    * WriteJobStatsTracker buys Delta, obtained from the footer the
+    * tracker would have populated anyway. Per field:
+    *   - rows: the row groups' counts, summed;
+    *   - a stats column's [lo, hi]: its row groups' min/max, folded.
+    *     Integral min/max ARE min/max(cast(col as long)); string
+    *     min/max compare unsigned-lexicographic, the order UTF8String
+    *     uses, and enter the grammar through [[stringStatFloor]] /
+    *     [[stringStatCeil]] (both monotone, so folding encoded bounds
+    *     equals encoding folded ones; a writer that truncates footer
+    *     strings still leaves a lower and an upper bound). A column
+    *     of any other type, an all-null one, or one where any row
+    *     group has no statistic (parquet drops min/max of values over
+    *     4 KB and writes none for INT96 timestamps) records NO bounds
+    *     for the file — the conservative keep that pruning applies;
+    *   - the partition tuple: the `__p_<col>=<hex>` directory
+    *     [[writeFiles]] laid the file under. Its value is the hex of
+    *     cast(col as string), so every partition type reads the same.
+    */
   private[graft] def entriesFromDir(spark: SparkSession, sub: String,
-      columns: Seq[String], statsCol: Option[String],
-      partitionCols: Seq[String] = Nil,
-      statsCols: Seq[String] = Nil): Vector[ManifestEntry] =
-    entriesFromFooters(spark, sub, statsCol, partitionCols, statsCols)
-      .getOrElse(entriesFromReadback(spark, sub, columns, statsCol,
-        partitionCols, statsCols))
-
-  /** Footer-based fast path: Some(entries) when every required
-    * statistic is exactly recoverable from the parquet footers, None
-    * to fall back. Never guesses: a type outside the supported set,
-    * a missing/dropped statistic, or a partially-null partition
-    * chunk returns None and the Spark read-back decides. */
-  private[graft] def entriesFromFooters(spark: SparkSession, sub: String,
-      statsCol: Option[String], partitionCols: Seq[String],
-      statsCols: Seq[String]): Option[Vector[ManifestEntry]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
-    import org.apache.parquet.column.statistics.Statistics
-    import scala.util.control.NonFatal
-    // a column chunk's statistics, folded across the file's row
-    // groups: Left = unusable (fall back), Right(None) = all rows
-    // null (record no bounds / reject as partition value),
-    // Right(Some((min, max))) with the column's primitive type
-    sealed trait ColKind
-    case object KLong extends ColKind    // int32/int64, plain signed
-    case object KString extends ColKind  // binary, UTF-8 string
-    case object KDate extends ColKind    // int32, DATE (partition only)
-    def kindOf(pt: PrimitiveType): Option[ColKind] = {
-      import PrimitiveType.PrimitiveTypeName._
-      val ann = pt.getLogicalTypeAnnotation
-      pt.getPrimitiveTypeName match {
-        case INT64 if ann == null => Some(KLong)
-        case INT64 => ann match {
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth == 64 => Some(KLong)
-          case _ => None
-        }
-        case INT32 => ann match {
-          case null => Some(KLong)
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth <= 32 => Some(KLong)
-          case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-            Some(KDate)
-          case _ => None
-        }
-        case BINARY => ann match {
-          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-            Some(KString)
-          case _ => None
-        }
-        case _ => None
-      }
-    }
-    // operational escape hatch (also the A/B control arm): force the
-    // Spark read-back, e.g. against a writer whose footer stats are
-    // not trusted
-    if (sys.env.get("SPARK_GRAFT_STATS_READBACK").contains("1"))
-      return None
-    val need = (statsCol.toSeq ++ statsCols ++ partitionCols).distinct
-    try {
-      val f = fs(spark, sub)
-      val root = new Path(sub)
-      if (!f.exists(root)) return Some(Vector.empty)
-      val conf = spark.sessionState.newHadoopConf()
-      // the writer must not have enabled footer-stats truncation —
-      // truncated bounds are conservative for pruning but would
-      // diverge from the read-back's exact strings
-      if (conf.get("parquet.statistics.truncate.length") != null)
-        return None
-      val files = {
-        val it = f.listFiles(root, true)
-        val buf = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith(".")) buf += st
-        }
-        buf.result()
-      }
-      // Per-file footer fold. Result grammar: None = this footer is
-      // outside the stats contract (the WHOLE directory falls back to
-      // the read-back, exactly as the old sequential loop did);
-      // Some(None) = zero-row file (skipped — such files never appear
-      // in the read-back's group-by); Some(Some(entry)) = usable.
-      // The body keeps the original non-local `return None` fallback
-      // sites: scalac catches those in THIS def's frame on whichever
-      // thread runs it, so the function is safe on the pool below.
-      def fileEntry(fst: org.apache.hadoop.fs.FileStatus)
-          : Option[Option[ManifestEntry]] = {
-        val rdr = ParquetFileReader.open(HadoopInputFile.fromStatus(fst, conf))
-        val footer = try rdr.getFooter finally rdr.close()
-        val blocks = footer.getBlocks
-        val nRows = {
-          var t = 0L
-          blocks.forEach(b => t += b.getRowCount)
-          t
-        }
-        if (nRows == 0L) return Some(None)
-        val schema = footer.getFileMetaData.getSchema
-        // per needed column: (kind, folded min/max across groups);
-        // None bubbles a fallback out of the whole directory
-        val folded: Map[String, (ColKind, Option[(Any, Any)])] =
-          need.map { c =>
-            if (!schema.containsField(c)) return None
-            val tpe = schema.getType(Seq(c): _*)
-            if (!tpe.isPrimitive) return None
-            val kind = kindOf(tpe.asPrimitiveType()).getOrElse(return None)
-            var mn: Any = null
-            var mx: Any = null
-            var sawNullOnly = false
-            val bit = blocks.iterator()
-            while (bit.hasNext) {
-              val b = bit.next()
-              val cc = {
-                var found: org.apache.parquet.hadoop.metadata
-                  .ColumnChunkMetaData = null
-                val cit = b.getColumns.iterator()
-                while (cit.hasNext && found == null) {
-                  val x = cit.next()
-                  if (x.getPath.toArray.length == 1 &&
-                    x.getPath.toDotString == c) found = x
-                }
-                if (found == null) return None
-                found
-              }
-              val st: Statistics[_] = cc.getStatistics
-              if (st == null || st.isEmpty) return None
-              if (!st.hasNonNullValue) {
-                // distinguish "all values null" (legitimate: no
-                // bounds) from "stats dropped" (fall back)
-                if (st.isNumNullsSet && st.getNumNulls == b.getRowCount)
-                  sawNullOnly = true
-                else return None
-              } else {
-                (kind, st.genericGetMin, st.genericGetMax) match {
-                  case (KLong | KDate, lo: Number, hi: Number) =>
-                    val (l, h) = (lo.longValue(), hi.longValue())
-                    if (mn == null || l < mn.asInstanceOf[Long]) mn = l
-                    if (mx == null || h > mx.asInstanceOf[Long]) mx = h
-                  case (KString,
-                      lo: org.apache.parquet.io.api.Binary,
-                      hi: org.apache.parquet.io.api.Binary) =>
-                    val (l, h) =
-                      (lo.toStringUsingUTF8, hi.toStringUsingUTF8)
-                    if (mn == null || l < mn.asInstanceOf[String]) mn = l
-                    if (mx == null || h > mx.asInstanceOf[String]) mx = h
-                  case _ => return None
-                }
-              }
-            }
-            if (mn == null && !sawNullOnly) return None
-            c -> (kind, if (mn == null) None else Some((mn, mx)))
-          }.toMap
-        val part = partitionCols.map { c =>
-          val (kind, mm) = folded(c)
-          require(mm.isDefined,
-            s"partition column $c has a NULL value — partition " +
-              "tuples must be non-null (filter or fill before writing)")
-          val v = mm.get._1
-          val asStr = kind match {
-            case KLong => v.asInstanceOf[Long].toString
-            case KDate => java.time.LocalDate
-              .ofEpochDay(v.asInstanceOf[Long]).toString
-            case KString => v.asInstanceOf[String]
-          }
-          c -> asStr
-        }.toMap
-        val statsColIsStr = statsCol.exists(c => folded(c)._1 == KString)
-        val mstats = statsCols.flatMap { c =>
-          val (kind, mm) = folded(c)
-          kind match {
-            case KLong => mm.map(p => c -> (p._1.asInstanceOf[Long],
-              p._2.asInstanceOf[Long]))
-            case KString => mm.map(p =>
-              c -> (stringStatFloor(p._1.asInstanceOf[String]),
-                stringStatCeil(p._2.asInstanceOf[String])))
-            case KDate => return None // dates only as partition values
-          }
-        }.toMap ++
-          (statsCol match {
-            case Some(c) if statsColIsStr => folded(c)._2.map(p =>
-              c -> (stringStatFloor(p._1.asInstanceOf[String]),
-                stringStatCeil(p._2.asInstanceOf[String]))).toMap
-            case _ => Map.empty[String, (Long, Long)]
-          })
-        val loHi: Option[(Long, Long)] = statsCol match {
-          case Some(c) if !statsColIsStr =>
-            folded(c) match {
-              case (KLong, mm) => mm.map(p =>
-                (p._1.asInstanceOf[Long], p._2.asInstanceOf[Long]))
-              case _ => return None // non-integral statsCol: read-back
-            }
-          case _ => None
-        }
-        Some(Some(ManifestEntry(fst.getPath.toString, nRows,
-          loHi.map(_._1), loHi.map(_._2), part, mstats)))
-      }
-      // Footers are independent few-KB metadata reads: a wide write
-      // (hundreds of files per commit) must not pay a sequential
-      // open+seek+read per file on the driver. Small directories stay
-      // on the calling thread — below ~8 files the pool's spin-up
-      // costs more than it saves. The pool is bounded (16) because
-      // this is driver-side metadata I/O, not data work; a table
-      // beyond ~10k files per commit should move this fold into an
-      // executor job instead. SPARK_GRAFT_FOOTER_POOL=0 forces the
-      // sequential loop (operational escape hatch + the A/B control).
-      val poolOff =
-        sys.env.get("SPARK_GRAFT_FOOTER_POOL").contains("0")
-      val perFile: Vector[Option[Option[ManifestEntry]]] =
-        if (poolOff || files.length < 8) files.map(fileEntry)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, files.length))
-          try {
-            val futs = files.map { fst =>
-              pool.submit(new java.util.concurrent.Callable[
-                  Option[Option[ManifestEntry]]] {
-                override def call(): Option[Option[ManifestEntry]] =
-                  fileEntry(fst)
-              })
-            }
-            futs.map { fut =>
-              try fut.get()
-              catch {
-                case e: java.util.concurrent.ExecutionException =>
-                  // surface the worker's real exception so the outer
-                  // catch classifies it exactly as the sequential path
-                  // would (IllegalArgumentException = contract failure
-                  // rethrown; anything else = read-back fallback)
-                  throw e.getCause
-              }
-            }
-          } finally pool.shutdownNow()
-        }
-      if (perFile.exists(_.isEmpty)) None
-      else Some(perFile.flatten.flatten.sortBy(_.path))
-    } catch {
-      // a require() above is a CONTRACT failure (null partition
-      // value) and must surface exactly as the read-back would
-      case e: IllegalArgumentException => throw e
-      case NonFatal(_) => None
-    }
-  }
-
-  private[graft] def entriesFromReadback(spark: SparkSession, sub: String,
-      columns: Seq[String], statsCol: Option[String],
-      partitionCols: Seq[String] = Nil,
+      statsCol: Option[String], partitionCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Vector[ManifestEntry] = {
-    import org.apache.spark.sql.functions._
-    val back = spark.read.parquet(sub)
-      .select(columns.map(col) :+ input_file_name().as("__pf"): _*)
-    // string columns record min/max STRINGS per file (the grouped
-    // aggregate is one row per file — tiny), encoded into the stats
-    // grammar's long space driver-side ([[stringStatFloor]]/Ceil)
-    val isStr: Set[String] = statsCols.filter(c =>
-      back.schema(c).dataType ==
-        org.apache.spark.sql.types.StringType).toSet
-    // a STRING stats column records its bounds in the ENCODED space,
-    // carried by the multi-stats map under its own name (never the
-    // legacy lo/hi pair, which the numeric path records via
-    // cast('long') — mixing the two spaces in one slot let a
-    // numeric-parsing string statsCol prune wrongly; ADVICE r11)
-    val statsColIsStr: Boolean = statsCol.exists(c =>
-      back.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    val aggs = count(lit(1)).as("n") +:
-      (statsCol.toSeq.flatMap(c =>
-        if (statsColIsStr) Seq(min(col(c)).as("slo"),
-          max(col(c)).as("shi"))
-        else Seq(
-          min(col(c).cast("long")).as("slo"),
-          max(col(c).cast("long")).as("shi"))) ++
-       statsCols.zipWithIndex.flatMap { case (c, i) =>
-        if (isStr(c)) Seq(min(col(c)).as(s"mlo_$i"),
-          max(col(c)).as(s"mhi_$i"))
-        else Seq(min(col(c).cast("long")).as(s"mlo_$i"),
-          max(col(c).cast("long")).as(s"mhi_$i")) } ++
-       partitionCols.zipWithIndex.map { case (c, i) =>
-        min(col(c).cast("string")).as(s"pv_$i") })
-    val byFile = back.groupBy(col("__pf"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val statsBase = 2 + (if (statsCol.isDefined) 2 else 0)
-    val partBase = statsBase + 2 * statsCols.size
-    byFile.toVector.map { r =>
-      val part = partitionCols.zipWithIndex.map { case (c, i) =>
-        require(!r.isNullAt(partBase + i),
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.statistics.Statistics
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.BlockMetaData
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      IntLogicalTypeAnnotation, StringLogicalTypeAnnotation}
+    import org.apache.parquet.schema.{MessageType, PrimitiveType}
+    import PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    val f = fs(spark, sub)
+    val root = new Path(sub)
+    if (!f.exists(root)) return Vector.empty
+    val conf = spark.sessionState.newHadoopConf()
+    val files = {
+      val it = f.listFiles(root, true)
+      val buf = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        val n = st.getPath.getName
+        if (n.endsWith(".parquet") && !n.startsWith("_") &&
+          !n.startsWith(".")) buf += st
+      }
+      buf.result()
+    }
+    def primitive(schema: MessageType, c: String): Option[PrimitiveType] =
+      Some(c).filter(schema.containsField).map(c => schema.getType(Seq(c): _*))
+        .filter(_.isPrimitive).map(_.asPrimitiveType)
+    def isString(schema: MessageType, c: String): Boolean =
+      primitive(schema, c).exists(_.getLogicalTypeAnnotation
+        .isInstanceOf[StringLogicalTypeAnnotation])
+    val longs: Statistics[_] => (Long, Long) = st =>
+      (st.genericGetMin.asInstanceOf[Number].longValue,
+        st.genericGetMax.asInstanceOf[Number].longValue)
+    val strings: Statistics[_] => (Long, Long) = { st =>
+      def str(v: Any) = v.asInstanceOf[Binary].toStringUsingUTF8
+      (stringStatFloor(str(st.genericGetMin)),
+        stringStatCeil(str(st.genericGetMax)))
+    }
+    // how a row group's min/max of column c enter the stats grammar;
+    // None for every type the grammar does not hold exactly
+    def encoder(schema: MessageType, c: String)
+        : Option[Statistics[_] => (Long, Long)] =
+      primitive(schema, c).flatMap(pt =>
+        (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+          case (INT32 | INT64, null) => Some(longs)
+          case (INT32 | INT64, i: IntLogicalTypeAnnotation)
+              if i.isSigned => Some(longs)
+          case (BINARY, _: StringLogicalTypeAnnotation) => Some(strings)
+          case _ => None
+        })
+    def fileEntry(fst: org.apache.hadoop.fs.FileStatus): Option[ManifestEntry] = {
+      val rdr = ParquetFileReader.open(HadoopInputFile.fromStatus(fst, conf))
+      val footer = try rdr.getFooter finally rdr.close()
+      val blocks = footer.getBlocks.asScala.toSeq
+      val nRows = blocks.map(_.getRowCount).sum
+      if (nRows == 0L) return None // an empty file enters no manifest
+      val schema = footer.getFileMetaData.getSchema
+      def chunkStats(b: BlockMetaData, c: String): Option[Statistics[_]] =
+        b.getColumns.asScala.find(cc => cc.getPath.size == 1 &&
+            cc.getPath.toDotString == c)
+          .flatMap(cc => Option(cc.getStatistics)).filterNot(_.isEmpty)
+      def bounds(c: String): Option[(Long, Long)] =
+        encoder(schema, c).flatMap { enc =>
+          // per row group: its statistic, unless it was dropped (an
+          // all-null group legitimately has no min/max)
+          val groups = blocks.map(b => chunkStats(b, c).filter(st =>
+            st.hasNonNullValue ||
+              st.isNumNullsSet && st.getNumNulls == b.getRowCount))
+          if (groups.exists(_.isEmpty)) None
+          else groups.flatten.filter(_.hasNonNullValue).map(enc)
+            .reduceOption((a, b) => (a._1 min b._1, a._2 max b._2))
+        }
+      val dirs: Map[String, String] =
+        Iterator.iterate(fst.getPath.getParent)(_.getParent)
+          .takeWhile(p => p != null && p.getName.startsWith("__p_") &&
+            p.getName.contains('='))
+          .map { p =>
+            val (k, v) = p.getName.splitAt(p.getName.indexOf('='))
+            hiveUnescape(k.stripPrefix("__p_")) -> v.tail
+          }.toMap
+      val part = partitionCols.map { c =>
+        val hex = dirs.getOrElse(c, throw new IllegalArgumentException(
+          s"${fst.getPath} is not under a __p_$c= partition directory"))
+        // Spark writes an empty value under the null one's name: only a
+        // file whose footer counts no null in c holds the empty string
+        val nullDir = hex == "__HIVE_DEFAULT_PARTITION__"
+        require(!nullDir || blocks.forall(b => chunkStats(b, c)
+            .exists(st => st.isNumNullsSet && st.getNumNulls == 0)),
           s"partition column $c has a NULL value — partition tuples " +
             "must be non-null (filter or fill before writing)")
-        c -> r.getString(partBase + i)
+        c -> (if (nullDir) "" else new String(
+          java.util.HexFormat.of.parseHex(hex),
+          java.nio.charset.StandardCharsets.UTF_8))
       }.toMap
-      val mstats = statsCols.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(statsBase + 2 * i)) None
-        else if (isStr(c)) Some(c ->
-          (stringStatFloor(r.getString(statsBase + 2 * i)),
-            stringStatCeil(r.getString(statsBase + 2 * i + 1))))
-        else Some(c -> (r.getLong(statsBase + 2 * i),
-          r.getLong(statsBase + 2 * i + 1)))
-      }.toMap ++
-        // string statsCol: encoded bounds under its own multi-stats key
-        (if (statsColIsStr && !r.isNullAt(2))
-          Map(statsCol.get -> (stringStatFloor(r.getString(2)),
-            stringStatCeil(r.getString(3))))
-        else Map.empty)
-      // an all-null stats column in a file (or a cast('long') that
-      // nulled out) records NO bounds — conservative keep at prune
-      // time, never a read-back crash
-      val numLoHi = statsCol.isDefined && !statsColIsStr && !r.isNullAt(2)
-      ManifestEntry(
-        // input_file_name is URI-encoded; normalize to the Path form
-        // listStatus would give
-        new Path(new java.net.URI(r.getString(0))).toString,
-        r.getLong(1),
-        if (numLoHi) Some(r.getLong(2)) else None,
-        if (numLoHi) Some(r.getLong(3)) else None,
-        part, mstats)
-    }.sortBy(_.path)
+      // a string stats column records ENCODED bounds under its own
+      // name in the multi-stats map, never the legacy numeric lo/hi
+      // pair (mixing the two spaces in one slot let a numeric-parsing
+      // string statsCol prune wrongly; ADVICE r11)
+      val statsColIsStr = statsCol.exists(isString(schema, _))
+      val mstats = (statsCols ++ statsCol.filter(_ => statsColIsStr))
+        .flatMap(c => bounds(c).map(c -> _)).toMap
+      val loHi = statsCol.filterNot(_ => statsColIsStr).flatMap(bounds)
+      Some(ManifestEntry(fst.getPath.toString, nRows,
+        loHi.map(_._1), loHi.map(_._2), part, mstats))
+    }
+    // Footers are independent few-KB metadata reads: a wide write
+    // (hundreds of files per commit) must not pay a sequential
+    // open+seek+read per file on the driver. Small directories stay on
+    // the calling thread — below ~8 files the pool's spin-up costs more
+    // than it saves. The pool is bounded (16) because this is
+    // driver-side metadata I/O, not data work; a table beyond ~10k
+    // files per commit should move this fold into an executor job.
+    val perFile: Vector[Option[ManifestEntry]] =
+      if (files.length < 8) files.map(fileEntry)
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(16, files.length))
+        try {
+          val futs = files.map(fst => pool.submit(
+            new java.util.concurrent.Callable[Option[ManifestEntry]] {
+              override def call(): Option[ManifestEntry] = fileEntry(fst)
+            }))
+          // surface a worker's own exception (a null partition's
+          // IllegalArgumentException) exactly as the calling thread would
+          futs.map { fut =>
+            try fut.get()
+            catch {
+              case e: java.util.concurrent.ExecutionException =>
+                throw e.getCause
+            }
+          }
+        } finally pool.shutdownNow()
+      }
+    perFile.flatten.sortBy(_.path)
   }
 
   /** Initialize an EMPTY table at version 1 — CREATE TABLE without
@@ -2776,8 +2597,8 @@ object ManifestTable {
       if (!staged) Vector.empty // the operation deleted every row
       else if (cur0.partCols.isEmpty) {
         // staged files speak PHYSICAL names (the DSv2 write stages
-        // a mapped table under its stored names); the stats read-back
-        // runs physical, the recorded keys translate back to logical
+        // a mapped table under its stored names); the stats collect
+        // physical, the recorded keys translate back to logical
         val st = cur0.schemaDdl
           .map(org.apache.spark.sql.types.StructType.fromDDL)
           .getOrElse(spark.read.parquet(stagingDir).schema)
@@ -2788,8 +2609,8 @@ object ManifestTable {
             spark.read.schema(phys).parquet(stagingDir)
               .toDF(st.fieldNames.toIndexedSeq: _*),
             cur0.checks, s"replace-data write to $dir")
-        val raw = entriesFromDir(spark, stagingDir, phys.fieldNames.toSeq,
-          physStats, Nil, autoStatsFor(phys, physStats, Nil))
+        val raw = entriesFromDir(spark, stagingDir, physStats, Nil,
+          autoStatsFor(phys, physStats, Nil))
         if (cur0.colMap.isEmpty) raw
         else {
           val back = cur0.colMap.map(_.swap)

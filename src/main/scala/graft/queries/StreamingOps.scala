@@ -2080,15 +2080,24 @@ object StreamingOps extends QueryPack {
         .filter($"event_type" === "purchase" && $"value" >= 50.0)
         .select($"event_id", $"user_id",
           round($"value" * 100).cast("long").as("cents"))
+      // every continuous reader holds a task slot for the query's whole
+      // life, and the batch counts that watch the drain need one more:
+      // with no slot left they would wait forever
+      val slots = s.sparkContext.defaultParallelism
+      val readers = math.min(4, slots - 1)
+      require(readers >= 1, s"stC1_continuous_map needs at least 2 task " +
+        s"slots (a continuous reader plus the drain's batch reads); " +
+        s"this session has $slots")
+      // the batch scan of the same id space is the drain target
+      val want = shaped(s.read.format("graft-events")
+        .option("totalRows", "2000").load()).count()
       val q = shaped(s.readStream.format("graft-events")
-          .option("totalRows", "2000").option("numPartitions", "4").load())
+          .option("totalRows", "2000")
+          .option("numPartitions", readers.toString).load())
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.Continuous("200 milliseconds"))
         .start()
-      // the batch scan of the same id space is the drain target
-      val want = shaped(s.read.format("graft-events")
-        .option("totalRows", "2000").load()).count()
       val got = try {
         val deadline = System.nanoTime() + 120L * 1000L * 1000 * 1000
         var n = -1L
@@ -2828,23 +2837,16 @@ object StreamingOps extends QueryPack {
       var batches = 0
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
-      // The probe side is identical in every micro-batch; caching it
-      // across the drain was TRIED (round 9) and reverted, then
-      // re-measured at sf1 (round 10, SPARK_GRAFT_ST33_CACHE=1 flips
-      // this toggle): at sf0.1 no-cache wins slightly (18.6 s vs
-      // 19.3 s solo), at sf1 the crossover flips but stays SHALLOW
-      // (29.3 s vs 27.3 s — ~7%), and the re-scan grows SUBLINEARLY
-      // (1.6× time for 10× data) because the probe touches the
-      // bucketed index only through candidate-restricted semi-joins.
-      // The bucketed storage layout IS the cache at this shape;
-      // default stays no-cache (bench tier is sf0.1; a 7% sf1 win
-      // does not buy the executor-memory footprint of a pinned
-      // corpus). PLANS §109 keeps both arms' numbers.
-      val cacheProbe = sys.env.get("SPARK_GRAFT_ST33_CACHE").contains("1")
-      if (cacheProbe) {
-        s.table(bandsTbl).persist().count()
-        s.table(shTbl).persist().count()
-      }
+      // The probe side is identical in every micro-batch and is NOT
+      // cached across the drain: persisting both index tables measured
+      // 18.6 s no-cache vs 19.3 s cached at sf0.1 and a shallow ~7%
+      // cached win at sf1 (29.3 s vs 27.3 s); the re-scan grows
+      // SUBLINEARLY (1.6× time for 10× data) because the probe touches
+      // the bucketed index only through candidate-restricted
+      // semi-joins. The bucketed storage layout IS the cache at this
+      // shape, and a 7% sf1 win does not buy the executor-memory
+      // footprint of a pinned corpus. PLANS §109 keeps both arms'
+      // numbers.
       try {
         val q = stream.writeStream
           .outputMode(OutputMode.Append())
@@ -2890,10 +2892,6 @@ object StreamingOps extends QueryPack {
         q.awaitTermination()
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prev)
-        if (cacheProbe) {
-          s.table(bandsTbl).unpersist()
-          s.table(shTbl).unpersist()
-        }
       }
       require(batches >= 4,
         s"expected >= 4 incremental micro-batches, saw $batches — the " +

@@ -152,30 +152,54 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
     }
   }
 
+  /** Drain a parquet directory into `ckpt` once, then flip one byte of
+    * the checkpoint's `offsets/0`; returns the drain's input directory. */
+  private def corruptedCheckpoint(s: SparkSession, dir: NioPath,
+      ckpt: NioPath): String = {
+    val in = dir.resolve("in").toString
+    s.range(10).write.parquet(in)
+    drain(s, in, ckpt).awaitTermination()
+    val offsets = ckpt.resolve("offsets/0")
+    assert(Files.exists(ckpt.resolve("offsets/.0.crc")))
+    val bytes = Files.readAllBytes(offsets)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x20).toByte
+    Files.write(offsets, bytes)
+    in
+  }
+
+  private def drain(s: SparkSession, in: String, ckpt: NioPath) =
+    s.readStream.schema(s.read.parquet(in).schema).parquet(in)
+      .writeStream.format("noop")
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start()
+
   test("a flipped byte in a checkpoint file fails the .crc check on read") {
     val s = spark
     val conf = s.sparkContext.hadoopConfiguration
     withTempDir { dir =>
-      val in = dir.resolve("in").toString
-      s.range(10).write.parquet(in)
       val ckpt = dir.resolve("ckpt")
-      s.readStream.schema(s.read.parquet(in).schema).parquet(in)
-        .writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      val offsets = ckpt.resolve("offsets/0")
-      assert(Files.exists(ckpt.resolve("offsets/.0.crc")))
-      val bytes = Files.readAllBytes(offsets)
-      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x20).toByte
-      Files.write(offsets, bytes)
-      val p = new Path(offsets.toString)
-      // both wrappers verify the sidecar. (FileContext.open(path) itself
-      // reaches the raw file through FilterFs.open(path) and checks
-      // nothing, with Hadoop's stock LocalFs as well.)
-      intercept[ChecksumException](FileContext.getFileContext(conf)
-        .getDefaultFileSystem.open(p, 4096).readAllBytes())
+      corruptedCheckpoint(s, dir, ckpt)
+      val p = new Path(ckpt.resolve("offsets/0").toString)
+      // FileContext.open(path) is the read of Spark's checkpoint file
+      // manager; the FileSystem wrapper verifies the sidecar as well
+      intercept[ChecksumException](
+        FileContext.getFileContext(conf).open(p).readAllBytes())
       intercept[ChecksumException](
         FileSystem.get(URI.create("file:///"), conf).open(p).readAllBytes())
+    }
+  }
+
+  test("restarting a streaming query over a corrupt offsets file fails " +
+      "with ChecksumException") {
+    val s = spark
+    withTempDir { dir =>
+      val ckpt = dir.resolve("ckpt")
+      val in = corruptedCheckpoint(s, dir, ckpt)
+      val e = intercept[Exception](drain(s, in, ckpt).awaitTermination())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[ChecksumException]),
+        s"restart over a corrupt offsets/0 must fail the .crc check: $e")
     }
   }
 }
